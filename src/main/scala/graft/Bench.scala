@@ -41,31 +41,50 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    // warmup: run everything once (also surfaces failures before timing)
+    // drop caches a previous run registered before every timed run:
+    // Spark's cache manager matches by logical plan, so a timed query would
+    // otherwise silently read earlier materialized blocks instead of doing
+    // its own work.
+    val line = record(SparkEntry.queries.keys.toSeq.sorted, sfDir,
+      () => spark.catalog.clearCache())(n => SparkEntry.queries(n)(spark, sfDir).count())
+    println(line)
+    // the stdout line can be tail-truncated by log capture; the file copy is
+    // the durable record (read bench.json when in doubt)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")), line + "\n")
+    spark.stop()
+  }
+
+  /** The one-line JSON record: each query runs once as a warmup (which
+    * also surfaces failures before timing), then three timed runs, each
+    * after `beforeRun`. A query whose timed run throws is listed under
+    * "failed" and never timed: it is left out of every timing key and of
+    * `total`/`min_total`. */
+  def record(names: Seq[String], sf: String, beforeRun: () => Unit)(
+      run: String => Unit): String = {
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count()
+      try run(n)
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $n failed: ${e.getMessage}") }
     }
-    val results = names.map { name =>
-      val runs = (1 to 3).map { _ =>
-        // drop caches a previous run registered: Spark's cache manager
-        // matches by logical plan, so a timed query would otherwise
-        // silently read earlier materialized blocks instead of doing its
-        // own work.
-        spark.catalog.clearCache()
+    val timed = names.map { name =>
+      name -> (try Some((1 to 3).map { _ =>
+        beforeRun()
         val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case _: Throwable => -1L }
+        run(name)
         (System.nanoTime() - t0) / 1e9
-      }.sorted
-      // median is the headline; MIN rides along because box contention
-      // can span all three runs (a past round printed a 7× phantom
-      // regression) — min-of-3 is the contention-robust floor a reader
-      // should trust when median and min disagree wildly.
-      name -> (runs(1), runs(0))
+      }.sorted)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] timed $name failed: ${e.getMessage}")
+        None
+      })
     }
+    // median is the headline; MIN rides along because box contention
+    // can span all three runs (a past round printed a 7× phantom
+    // regression) — min-of-3 is the contention-robust floor a reader
+    // should trust when median and min disagree wildly.
+    val results = timed.collect { case (k, Some(runs)) => k -> (runs(1), runs(0)) }
+    val failed = timed.collect { case (k, None) => "\"" + k + "\"" }
     val qs = results.map { case (k, (med, _)) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
     val qsMin = results.map { case (k, (_, mn)) => "\"" + k + "\":" + mn }
@@ -76,12 +95,6 @@ object Bench {
     // from a busy machine (-1.0 when the JVM can't read it)
     val load = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min_total":$totalMin,"queries_min":$qsMin,"load_avg_1m":$load,"sf":"$sfDir"}"""
-    println(line)
-    // the stdout line can be tail-truncated by log capture; the file copy is
-    // the durable record (driver/judge can read bench.json when in doubt)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")), line + "\n")
-    spark.stop()
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min_total":$totalMin,"queries_min":$qsMin,"failed":${failed.mkString("[", ",", "]")},"load_avg_1m":$load,"sf":"$sf"}"""
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.GraftCatalog
 import graft.doc.DocStore
 import graft.graph.{Cypher, PropertyGraph}
+import graft.graph.PropertyGraph.MergeRows
 import graft.kv.KvStore
 import graft.sql.HashQL
 
@@ -79,25 +80,33 @@ final class HashDb(val spark: SparkSession) {
       .select("json").collect().headOption.map(_.getString(0))
 
   // ---------------- graph surface (POST /cypher) ------------------------
-  private var mergesSinceCheckpoint = 0
+  private var pending = MergeRows.empty
+  private var mutations = 0
 
   /** Mutating statements (MERGE / DETACH DELETE / SET) change the graph
-    * and return None; MATCH returns bindings. Every mutation deepens the
-    * graph's logical plan by one join/union layer, so unbounded statement
-    * streams periodically truncate lineage (localCheckpoint) to keep
-    * analysis cost flat. */
+    * and return None; MATCH returns bindings. A MERGE only appends its
+    * validated rows to a driver-side buffer; reads apply the whole buffer
+    * as ONE batched upsert ([[graphState]]), so their plan depth does not
+    * grow with the number of MERGEs. DETACH DELETE / SET fold the buffer
+    * into the base first. Every 32nd mutation also truncates lineage
+    * (localCheckpoint), keeping the base shallow over long streams. */
   def cypher(statement: String): Option[DataFrame] =
     Cypher.parse(statement) match {
-      case _: Cypher.Merge | _: Cypher.Delete | _: Cypher.SetAttrs =>
-        graph = graph.execute(statement)
-        mergesSinceCheckpoint += 1
-        if (mergesSinceCheckpoint >= 32) {
-          graph = graph.checkpointLocal()
-          mergesSinceCheckpoint = 0
-        }
-        None
+      case m: Cypher.Merge => mutated(graph, pending ++ MergeRows.of(m))
+      case _: Cypher.Delete | _: Cypher.SetAttrs =>
+        mutated(graphState.execute(statement), MergeRows.empty)
       case _: Cypher.Match | _: Cypher.With | _: Cypher.ShortestPathStmt =>
-        Some(graph.query(statement))
+        Some(graphState.query(statement))
     }
-  def graphState: PropertyGraph = graph
+
+  private def mutated(base: PropertyGraph, buffered: MergeRows): Option[DataFrame] = {
+    mutations += 1
+    val cut = mutations % 32 == 0
+    graph = if (cut) base.merge(buffered).checkpointLocal() else base
+    pending = if (cut) MergeRows.empty else buffered
+    None
+  }
+
+  /** The current graph: the base with the buffered MERGE rows applied. */
+  def graphState: PropertyGraph = graph.merge(pending)
 }

@@ -154,24 +154,31 @@ final class GraftCatalog(val spark: SparkSession) {
     val id = counters.getOrElse(name, 0L) + 1
     counters += name -> id
     val fields = ("id" -> (id: Any)) +: values
-    val schema = StructType(fields.map { case (f, v) =>
-      StructField(f, v match {
-        case _: Long | _: Int => LongType
-        // decimal literals coerce to Double in the dialect (F2)
-        case _: Double => DoubleType
-        // typed temporal literals (round 11): `timestamp '…'`/`date '…'`
-        // insert as native temporal columns
-        case _: java.sql.Timestamp => TimestampType
-        case _: java.sql.Date => DateType
-        case _ => StringType
-      })
-    })
-    val row = Row.fromSeq(fields.map {
-      case (_, v: Int) => v.toLong
-      case (_, v) => v
-    })
+    // store assignment: an integer literal that fits an existing INT
+    // column goes in as INT, so an INSERT never widens a loaded INT column
+    // to BIGINT (a widened join key joins through a cast, which join-view
+    // materialization rejects)
+    val colTypes = tables.get(name).fold(Map.empty[String, DataType])(
+      _.schema.fields.map(f => f.name -> f.dataType).toMap)
+    val typed = fields.map { case (f, v0) =>
+      val v = v0 match { case i: Int => i.toLong; case o => o }
+      (v, colTypes.get(f)) match {
+        case (n: Long, Some(IntegerType)) if n.isValidInt => StructField(f, IntegerType) -> n.toInt
+        case _ => StructField(f, v match {
+          case _: Long => LongType
+          // decimal literals coerce to Double in the dialect (F2)
+          case _: Double => DoubleType
+          // typed temporal literals (round 11): `timestamp '…'`/`date '…'`
+          // insert as native temporal columns
+          case _: java.sql.Timestamp => TimestampType
+          case _: java.sql.Date => DateType
+          case _ => StringType
+        }) -> v
+      }
+    }
     val rowDf = spark.createDataFrame(
-      java.util.Collections.singletonList(row), schema)
+      java.util.Collections.singletonList(Row.fromSeq(typed.map(_._2))),
+      StructType(typed.map(_._1)))
     commit(name, tables.get(name) match {
       case Some(existing) => existing.unionByName(rowDf, allowMissingColumns = true)
       case None => rowDf

@@ -30,56 +30,50 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     if (edges.columns.contains("eattrs")) edges
     else edges.withColumn("eattrs", typedLit(Map.empty[String, String]))
 
-  /** G1/G2 MERGE: upsert the nodes and edges of one chain. Idempotent —
-    * re-merging an existing node/edge is a no-op, and deterministically so:
-    * both nodes and edges go through a full-outer join whose coalesce
-    * always prefers the EXISTING row (the reference's match-by-attributes
-    * no-op case, client.py:876-889) — for edges that means re-merging an
-    * existing (src, dst, rel) with DIFFERENT properties keeps the stored
-    * properties.
+  /** `es` restricted to the given relationship types (all when empty). */
+  private def ofRels(rels: Seq[String], es: DataFrame = edges): DataFrame =
+    if (rels.isEmpty) es else es.filter(col("rel").isin(rels: _*))
+
+  /** The simple undirected graph as (u, v) with u < v: direction, parallel
+    * edges and self-loops dropped. */
+  private def simpleEdges(rels: Seq[String]): DataFrame =
+    ofRels(rels).filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
+      .distinct()
+
+  /** G1/G2 MERGE: upsert the nodes and edges of MERGE statements in ONE
+    * full-outer-join layer per frame, however many statements. Idempotent
+    * and deterministic: existing rows win over new ones (the reference's
+    * match-by-attributes no-op case, client.py:876-889 — re-merging an
+    * edge with DIFFERENT properties keeps the stored ones), and among new
+    * rows the first occurrence wins, within and across statements
+    * (resolved driver-side, in statement order). So one call over k
+    * statements equals k one-statement calls: a row an earlier statement
+    * added is "existing" to every later one.
     *
-    * Plan-growth discipline: each merge references the previous
-    * vertices/edges plan exactly ONCE, so a stream of k statements builds a
-    * depth-k plan (an anti-join + union formulation would reference the
-    * previous plan twice and go exponential — 19 example.py merges is
-    * 2^19 plan nodes, observed as an analyzer OOM). Relies on the
-    * invariant that label/attrs are never null in `vertices` (insert paths
-    * default label to "" and attrs to the pattern map). For bulk statement
-    * streams, [[compact]] resets depth to 1. */
-  def merge(stmt: Cypher.Merge): PropertyGraph = {
+    * Plan growth: a call references the previous vertices/edges plan
+    * exactly ONCE (an anti-join + union formulation would reference it
+    * twice and go exponential over chained calls). Relies on label/attrs
+    * never being null in `vertices`. */
+  def merge(stmts: Seq[Cypher.Merge]): PropertyGraph =
+    merge(stmts.map(PropertyGraph.MergeRows.of)
+      .foldLeft(PropertyGraph.MergeRows.empty)(_ ++ _))
+
+  def merge(rows: PropertyGraph.MergeRows): PropertyGraph = if (rows.vertices.isEmpty) this else {
     val spark = vertices.sparkSession
     import spark.implicits._
-    val ns = stmt.chain.nodes.map(n =>
-      (PropertyGraph.identityOf(n.label, n.attrs), n.label.getOrElse(""), n.attrs))
-    val es = stmt.chain.rels.zipWithIndex.map { case (r, k) =>
-      require(r.minHops == 1 && r.maxHops == 1,
-        "MERGE cannot take a variable-length edge (*m..n is MATCH-only)")
-      r.dir match {
-        case Cypher.Out => (ns(k)._1, ns(k + 1)._1, r.typ, r.attrs)
-        case Cypher.In => (ns(k + 1)._1, ns(k)._1, r.typ, r.attrs)
-        case Cypher.Both => throw new IllegalArgumentException(
-          "MERGE requires a directed edge (-[:R]-> or <-[:R]-)")
-      }
-    }
-    // within-statement duplicates resolved driver-side, first occurrence
-    // wins (deterministic — ns/es are in statement order)
-    val newV = ns.distinctBy(_._1).toDF("name", "label", "attrs")
-    val newE = es.distinctBy(t => (t._1, t._2, t._3))
+    val newV = rows.vertices.distinctBy(_._1).toDF("name", "label", "attrs")
+    val newE = rows.edges.distinctBy(t => (t._1, t._2, t._3))
       .toDF("src", "dst", "rel", "eattrs")
     val v2 = vertices.alias("o").join(newV.alias("n"), Seq("name"), "full_outer")
       .select(col("name"),
         coalesce(col("o.label"), col("n.label")).as("label"),
         coalesce(col("o.attrs"), col("n.attrs")).as("attrs"))
-    // edge identity is (src, dst, rel); attrs are payload — re-merging an
-    // existing edge keeps the EXISTING attrs (same preference as nodes).
-    // Identity-dedup first: a CALLER-supplied edge frame may carry
-    // duplicate identity rows (merge-built frames never do) — the
-    // full-outer join would preserve that multiplicity where the old
-    // union+dropDuplicates formulation collapsed it. The winner among
-    // duplicates with DIFFERENT eattrs is chosen by min over a canonical
-    // entry-sorted JSON rendering of the map (dropDuplicates would keep an
-    // arbitrary row, so repeated merges could flip stored properties run
-    // to run); same serialization ⇒ same map, so the choice is total.
+    // edge identity is (src, dst, rel); eattrs are payload. A CALLER-
+    // supplied edge frame may carry duplicate identities (merge-built
+    // frames never do), which the full-outer join would keep: dedup first,
+    // picking the min canonical (entry-sorted JSON) eattrs so the winner
+    // is the same every run.
     val eattrsCanon = coalesce(
       to_json(map_from_entries(array_sort(map_entries(col("eattrs"))))), lit(""))
     val dedupedOld = edgesN
@@ -93,7 +87,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   }
 
   def merge(cypher: String): PropertyGraph = Cypher.parse(cypher) match {
-    case m: Cypher.Merge => merge(m)
+    case m: Cypher.Merge => merge(Seq(m))
     case _ => throw new IllegalArgumentException(s"not a MERGE: $cypher")
   }
 
@@ -111,8 +105,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     Some(v.select(col("name").as(as)))
   }
 
-  /** Truncate the accumulated MERGE lineage in-memory (localCheckpoint) —
-    * plan depth back to 1 without parquet IO. For statement streams where
+  /** Truncate the accumulated mutation lineage in-memory (localCheckpoint)
+    * — plan depth back to 1 without parquet IO. For statement streams where
     * durability doesn't matter (session-local graphs); use [[compact]] to
     * land the state on disk. */
   def checkpointLocal(): PropertyGraph =
@@ -127,9 +121,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * above, identical representatives either way — so the graph surface
     * and the dedup pipeline share ONE closure implementation. */
   def connectedComponents(rels: Seq[String] = Nil): DataFrame = {
-    val es = (if (rels.isEmpty) edges
-      else edges.filter(col("rel").isin(rels: _*)))
-      .select(col("src").as("a"), col("dst").as("b"))
+    val es = ofRels(rels).select(col("src").as("a"), col("dst").as("b"))
     val cl = graft.llm.Dedup.clusters(es).withColumnRenamed("doc_id", "node")
     vertices.select(col("name").as("node"))
       .join(cl, Seq("node"), "left")
@@ -161,17 +153,36 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * to ~10^12 on ~10^5-rank graphs. */
   def pageRank(iters: Int = 2, rels: Seq[String] = Nil,
                scale: Long = 1000000L,
-               weight: Option[Column] = None): DataFrame = {
-    require(iters >= 0 && iters <= 8, s"iters must be in 0..8, got $iters")
-    val base = (if (rels.isEmpty) edgesN
-      else edgesN.filter(col("rel").isin(rels: _*)))
-    val es = base
+               weight: Option[Column] = None): DataFrame =
+    rankRounds(iters, ofRels(rels, edgesN)
       .select(col("src"), col("dst"),
         weight.map(_.cast("long")).getOrElse(lit(1L)).as("w"))
-      .filter(col("w").isNotNull && col("w") > 0)
+      .filter(col("w").isNotNull && col("w") > 0),
+      init = lit(scale), teleport = lit(15L * scale / 100L))
+
+  /** Personalized PageRank (growth — the recommendation/similar-node
+    * workhorse): [[pageRank]]'s exact integer fixed-point arithmetic with
+    * ALL teleport mass at `source` — rank₀ = scale·[v = source], round =
+    * `rank' = [v = source]·(15·scale) div 100 + (85·Σ contribs) div 100`.
+    * Ranks measure proximity to the source through directed edges;
+    * integer sums keep iterated ranks partition- and engine-
+    * reproducible. Same fixed-depth plan discipline as pageRank. */
+  def personalizedPageRank(source: String, iters: Int = 2,
+                           rels: Seq[String] = Nil,
+                           scale: Long = 1000000L): DataFrame =
+    rankRounds(iters, ofRels(rels).select(col("src"), col("dst"), lit(1L).as("w")),
+      init = when(col("name") === source, lit(scale)).otherwise(lit(0L)),
+      teleport = when(col("node") === source, lit(15L * scale / 100L)).otherwise(lit(0L)))
+
+  /** The fixed-point rounds shared by [[pageRank]] and
+    * [[personalizedPageRank]] over weighted edges (src, dst, w): each
+    * round sends (rank·w) div Σw along every out-edge and sets
+    * rank' = teleport + (85·Σ contribs) div 100. */
+  private def rankRounds(iters: Int, es: DataFrame, init: Column,
+                         teleport: Column): DataFrame = {
+    require(iters >= 0 && iters <= 8, s"iters must be in 0..8, got $iters")
     val outW = es.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    var ranks = vertices.select(col("name").as("node"),
-      lit(scale).as("rank"))
+    var ranks = vertices.select(col("name").as("node"), init.as("rank"))
     (0 until iters).foreach { _ =>
       val contribs = es
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
@@ -183,42 +194,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         .select(col("node"), coalesce(col("cin"), lit(0L)).as("cin"))
         // integral `div` (not `/`, which widens to double) keeps every
         // step exact — the whole point of the fixed-point formulation
-        .select(col("node"),
-          expr(s"${15L * scale / 100L}L + (85L * cin) div 100L").as("rank"))
-    }
-    ranks
-  }
-
-  /** Personalized PageRank (growth — the recommendation/similar-node
-    * workhorse): [[pageRank]]'s exact integer fixed-point arithmetic with
-    * ALL teleport mass at `source` — rank₀ = scale·[v = source], round =
-    * `rank' = [v = source]·(15·scale) div 100 + (85·Σ contribs) div 100`.
-    * Ranks measure proximity to the source through directed edges;
-    * integer sums keep iterated ranks partition- and engine-
-    * reproducible. Same fixed-depth plan discipline as pageRank. */
-  def personalizedPageRank(source: String, iters: Int = 2,
-                           rels: Seq[String] = Nil,
-                           scale: Long = 1000000L): DataFrame = {
-    require(iters >= 0 && iters <= 8, s"iters must be in 0..8, got $iters")
-    val es = (if (rels.isEmpty) edges
-      else edges.filter(col("rel").isin(rels: _*)))
-      .select(col("src"), col("dst"))
-    val outDeg = es.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-    val teleport = when(col("node") === source, lit(15L * scale / 100L))
-      .otherwise(lit(0L))
-    var ranks = vertices.select(col("name").as("node"),
-      when(col("name") === source, lit(scale)).otherwise(lit(0L)).as("rank"))
-    (0 until iters).foreach { _ =>
-      val contribs = es
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(outDeg, Seq("src"))
-        .select(col("dst").as("node"), expr("rank div odeg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("cin"))
-      ranks = vertices.select(col("name").as("node"))
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"), coalesce(col("cin"), lit(0L)).as("cin"))
-        .select(col("node"),
-          (teleport + expr("(85 * cin) div 100")).as("rank"))
+        .select(col("node"), (teleport + expr("(85L * cin) div 100L")).as("rank"))
     }
     ranks
   }
@@ -245,9 +221,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
                    directed: Boolean = false): DataFrame = {
     require(maxHops >= 0 && maxHops <= 16,
       s"maxHops must be in 0..16, got $maxHops")
-    val base = (if (rels.isEmpty) edges
-      else edges.filter(col("rel").isin(rels: _*)))
-      .select(col("src").as("u"), col("dst").as("v"))
+    val base = ofRels(rels).select(col("src").as("u"), col("dst").as("v"))
     val es = if (directed) base
       else base.unionByName(base.select(col("v").as("u"), col("u").as("v")))
     val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -287,12 +261,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * SMALLEST endpoint's degree, the standard high-degree-hub mitigation.
     */
   def triangleCounts(rels: Seq[String] = Nil): DataFrame = {
-    val base = (if (rels.isEmpty) edges
-      else edges.filter(col("rel").isin(rels: _*)))
-    val e = base.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val e = simpleEdges(rels)
     val wedges = e.select(col("u"), col("v").as("x"))
       .join(e.select(col("u"), col("v").as("y")), Seq("u"))
       .filter(col("x") < col("y"))
@@ -333,12 +302,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in 1..64, got $maxRounds")
-    val base = (if (rels.isEmpty) edges
-      else edges.filter(col("rel").isin(rels: _*)))
-    val e = base.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val e = simpleEdges(rels)
     // (round 16) persist the directional frame for the loop's lifetime:
     // it is read once per round, and un-persisted its lineage re-runs the
     // edge-list distinct (a full shuffle of the raw edge frame) EVERY
@@ -456,12 +420,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     require(k >= 3, s"k must be >= 3, got $k")
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in 1..64, got $maxRounds")
-    val base = (if (rels.isEmpty) edges
-      else edges.filter(col("rel").isin(rels: _*)))
-    val e0 = base.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val e0 = simpleEdges(rels)
       // read three times by the initial support count — pay the distinct
       // shuffle once (released as soon as `cur` is materialized)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -605,8 +564,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
                     directed: Boolean = false): DataFrame = {
     require(maxHops >= 0 && maxHops <= 16,
       s"maxHops must be in 0..16, got $maxHops")
-    val base = (if (rels.isEmpty) edges
-      else edges.filter(col("rel").isin(rels: _*)))
+    val base = ofRels(rels)
       .select(col("src").as("u"), col("dst").as("v"),
         weight.cast("long").as("w"))
     val es = if (directed) base
@@ -687,9 +645,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     dist.select(col("node"), col("dist"))
   }
 
-  /** Checkpoint the accumulated MERGE plan (each merge stacks a
-    * union+dropDuplicates) to parquet and re-read — plan depth back to 1.
-    * Run after bulk statement streams; semantics unchanged. */
+  /** Checkpoint the accumulated mutation plan (each [[merge]] or
+    * [[execute]] call stacks one join layer) to parquet and re-read — plan
+    * depth back to 1. Run after bulk statement streams; semantics
+    * unchanged. */
   def compact(dir: String): PropertyGraph = {
     val spark = vertices.sparkSession
     vertices.write.mode("overwrite").parquet(s"$dir/vertices")
@@ -1058,11 +1017,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * is usually broadcast-sized and the cascade stays map-side), `MATCH …
     * SET` upserts one attribute per set item on the bound nodes
     * (map_filter + map_concat — scan-side map surgery, no explode). Each
-    * statement references the previous vertices/edges plan once, same
-    * depth discipline as [[merge]]; [[compact]]/[[checkpointLocal]] reset
-    * depth for long statement streams. */
+    * statement references the previous vertices/edges plan once and adds
+    * one layer, same depth discipline as [[merge]];
+    * [[compact]]/[[checkpointLocal]] reset depth for long statement
+    * streams. */
   def execute(cypher: String): PropertyGraph = Cypher.parse(cypher) match {
-    case m: Cypher.Merge => merge(m)
+    case m: Cypher.Merge => merge(Seq(m))
     case Cypher.Delete(chains, wheres, vars) =>
       val bound = evalMatch(Cypher.Match(chains,
         vars.map(v => Cypher.Ret(v, None)), wheres))
@@ -1469,6 +1429,33 @@ object PropertyGraph {
     attrs.getOrElse("name",
       esc(label.getOrElse("")) + attrs.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${esc(k)}=${esc(v)}" }.mkString("{", ",", "}"))
+  }
+
+  /** The rows MERGE statements upsert, built driver-side in statement
+    * order: vertices (name, label, attrs), edges (src, dst, rel, eattrs).
+    * Building them validates the statement, so a bad MERGE throws here. */
+  final case class MergeRows(vertices: Vector[(String, String, Map[String, String])],
+                             edges: Vector[(String, String, String, Map[String, String])]) {
+    def ++(o: MergeRows): MergeRows = MergeRows(vertices ++ o.vertices, edges ++ o.edges)
+  }
+
+  object MergeRows {
+    val empty: MergeRows = MergeRows(Vector.empty, Vector.empty)
+
+    def of(stmt: Cypher.Merge): MergeRows = {
+      val ns = stmt.chain.nodes.map(n =>
+        (identityOf(n.label, n.attrs), n.label.getOrElse(""), n.attrs)).toVector
+      MergeRows(ns, stmt.chain.rels.zipWithIndex.map { case (r, k) =>
+        require(r.minHops == 1 && r.maxHops == 1,
+          "MERGE cannot take a variable-length edge (*m..n is MATCH-only)")
+        r.dir match {
+          case Cypher.Out => (ns(k)._1, ns(k + 1)._1, r.typ, r.attrs)
+          case Cypher.In => (ns(k + 1)._1, ns(k)._1, r.typ, r.attrs)
+          case Cypher.Both => throw new IllegalArgumentException(
+            "MERGE requires a directed edge (-[:R]-> or <-[:R]-)")
+        }
+      }.toVector)
+    }
   }
 
   def empty(spark: SparkSession): PropertyGraph = {

@@ -105,6 +105,27 @@ class GraphPropertySpec extends SparkSpec with PropertySampling {
     sinks.foreach(n => assert(a(n) == 150000L, s"$n: ${a(n)}"))
   }
 
+  test("pageRank and personalizedPageRank ≡ driver-side fixed-point rounds") {
+    val scale = 1000000L
+    def ref(edges: Seq[(String, String)], source: Option[String]): Map[String, Long] = {
+      val outDeg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      def at(n: String, v: Long) = if (source.forall(_ == n)) v else 0L
+      (1 to 3).foldLeft(names.map(n => n -> at(n, scale)).toMap) { (rank, _) =>
+        val cin = edges.groupBy(_._2).view
+          .mapValues(_.map { case (s, _) => rank(s) / outDeg(s) }.sum).toMap
+        names.map(n => n -> (at(n, 15L * scale / 100L) + 85L * cin.getOrElse(n, 0L) / 100L)).toMap
+      }
+    }
+    (1 to 3).foreach { seed =>
+      val edges = sample(edgesGen, seed + 300).distinct
+      val g = graphOf(edges)
+      assert(g.pageRank(iters = 3).as[(String, Long)].collect().toMap == ref(edges, None),
+        s"seed=$seed pageRank")
+      assert(g.personalizedPageRank("a", iters = 3).as[(String, Long)].collect().toMap ==
+        ref(edges, Some("a")), s"seed=$seed personalizedPageRank")
+    }
+  }
+
   test("bfsDistances ≡ driver-side BFS on random graphs, both orientations") {
     def refBfs(edges: Seq[(String, String)], src: String, maxHops: Int,
                directed: Boolean): Map[String, Long] = {
