@@ -11,10 +11,12 @@ import graft.functions.{CosineSim, LshBucket, NfcNormalize, RollingHash, VectorK
   *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   * }}}
   * Registers the custom codegen SQL functions: `rolling_hash`,
-  * `cosine_sim`, `lsh_bucket`, `nfc_normalize`. The materialized-view routing rule installs
-  * per-view at `MatView.materialize` time via
-  * experimental.extraOptimizations (it needs runtime registry state, not a
-  * static rule), and is therefore not listed here.
+  * `cosine_sim`, `lsh_bucket`, `nfc_normalize`. Not listed here:
+  * `MatView.Rewrite`, the one rule that routes queries to materialized
+  * join and aggregate views (dialect, DataFrame and SQL queries alike). It
+  * reads the per-session view registry, and `MatView` installs it through
+  * experimental.extraOptimizations when the session registers its first
+  * view, so a session without views never runs it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -1,50 +1,58 @@
 package graft.matview
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, Coalesce, Divide, EqualTo, Expression, If, IsNotNull, Literal}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, Coalesce, Divide, EqualTo, Expression, If, IsNotNull, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Materialized-view routing (SURVEY §2.3 J5 / §2.10 M3 / §4 "candidate for
-  * a custom Rule").
+/** Materialized views, and the one place that decides whether a query
+  * reads one (SURVEY §2.3 J5 / §2.10 M3).
   *
   * The reference maintains `create join` results at INSERT time so that
-  * later SELECTs read pre-joined rows (/root/reference/server.py:806-894,
-  * README.md:29-64). The Spark-first equivalent splits that into:
+  * later SELECTs read pre-joined rows (server.py:806-894, README.md:29-64).
+  * Here that splits into:
   *
   *  1. materialize: write the join once (batch) or incrementally
   *     (graft.streaming.Streams.maintainJoin) to parquet;
-  *  2. route: a Catalyst optimizer `Rule` that replaces any inner join
-  *     matching a registered view with a scan of the materialized parquet —
-  *     every SELECT over that join then skips the join, which is exactly
-  *     the read-path benefit the reference buys with insert-time
-  *     maintenance.
+  *  2. route: a Catalyst optimizer `Rule` that replaces a join a
+  *     registered view answers with a scan of the materialized parquet.
+  *     DataFrame, Spark SQL and HashQL dialect queries all plan through
+  *     it; the dialect has no router of its own.
   *
   * The rule runs with `spark.experimental.extraOptimizations`, i.e. AFTER
-  * column pruning/pushdown have reshaped the query, so matching is
-  * structural rather than plan-identity: a Join qualifies when (a) its
-  * leaf relations are the view's leaf relations and (b) its inner
-  * equi-condition involves the same column-name pairs. The substitute scan
-  * is wrapped in a by-name Project aliased to the join's original
-  * expression ids, so pruned queries and parents keep resolving.
-  * Limitation (by construction of CREATE JOIN views): column names across
-  * the joined tables must be distinct — true for every view the HashQL
-  * surface can register.
+  * pushdown and column pruning have reshaped the query, so matching is
+  * structural ([[flatten]]): a join subtree qualifies when its leaf
+  * relations are the view's (or a subset whose missing leaves are
+  * row-preserving) and its attr = attr key pairs are the view's among
+  * those leaves. Every other conjunct under the subtree (a pushed-down
+  * WHERE, condition residue) is re-applied by name over the scan. Leaves
+  * are compared as canonicalized plans, so two scans of different files
+  * never match. The substitute is wrapped in a by-name Project aliased to
+  * the join's expression ids, so pruned queries and parents keep
+  * resolving. Limitation (by construction of CREATE JOIN views): column
+  * names across the joined tables must be distinct.
   */
 object MatView {
 
-  private final case class Key(leaves: Set[String], cond: Set[(String, String)])
+  /** A join tree's identity: its leaf relations (canonicalized plans, which
+    * include the files a scan reads) and its key pairs by column name. */
+  private final case class Key(leaves: Set[LogicalPlan], cond: Set[(String, String)])
   private sealed trait ViewEntry { def name: String; def replacement: LogicalPlan }
+  /** `owner` maps each of the view's column names to its leaf; a query may
+    * leave out the `droppable` leaves (see [[rowPreserving]]). */
   private final case class JoinEntry(name: String, key: Key,
+                                     owner: Map[String, LogicalPlan],
+                                     droppable: Set[LogicalPlan],
                                      replacement: LogicalPlan) extends ViewEntry
   /** `canonical` drives the verbatim exact-match route; the containment
-    * route uses `childKey` (the view child's flatten() identity — None
-    * when the child isn't a plain relation/join chain, disabling
-    * containment) plus name-keyed maps from the view's output expressions
-    * ([[sqlKey]]) to the summary parquet's columns. */
+    * route uses `childKey` (the view child's [[flatten]] key — None when
+    * the child isn't a plain relation/join chain, disabling containment)
+    * plus name-keyed maps from the view's output expressions ([[sqlKey]])
+    * to the summary parquet's columns. */
   private final case class AggEntry(name: String, canonical: LogicalPlan,
                                     replacement: LogicalPlan,
                                     childKey: Option[Key],
@@ -78,105 +86,56 @@ object MatView {
     r.synchronized(f(r))
   }
 
-  /** A join side qualifies only if it is a bare relation under pruning-
-    * inserted Projects and optimizer-inserted IsNotNull(joinkey) filters —
-    * any USER filter (or other operator) means the query's join is NOT the
-    * registered view (e.g. a filtered variant), and substituting would
-    * silently drop it. */
-  private def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      conjuncts(l) ++ conjuncts(r)
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
     case x => Seq(x)
   }
+
+  /** A flattened join tree: its [[Key]] parts plus every other conjunct
+    * found under it. */
+  private final case class Flat(leaves: Seq[LogicalPlan], cond: Set[(String, String)],
+                                preds: Seq[Expression]) {
+    def key: Key = Key(leaves.toSet, cond)
+  }
+
   /** Flatten an inner-equi-join TREE (n-way, any shape — the reference's own
-    * `create join` smoke is 3-way, example.py:151-238) into its leaf
-    * relations plus the union of all equi-condition column-name pairs,
-    * plus the columns of every IsNotNull filter passed through. Returns
-    * None if anything other than a bare relation (modulo pruning-Projects
-    * / IsNotNull-Filters) or a plain inner equi-join appears — a user
-    * filter means the query is NOT the registered view, and so does a
-    * Project that COMPUTES anything (only attribute-list Projects, the
-    * shape column pruning inserts, are transparent — substituting through
-    * e.g. `upper(n_name).as("n_name")` would silently drop the
-    * computation).
+    * `create join` smoke is 3-way, example.py:151-238) into its leaves, its
+    * attr = attr key pairs, and every other conjunct under it: Filters at
+    * any depth (by the time the rule runs, a WHERE has been pushed onto the
+    * leaf scans) and condition residue (a cross-side predicate, or the
+    * dialect's missing-field `atleastnnonnulls`, folded into a join
+    * condition by pushdown). Only attribute-list Projects, the shape column
+    * pruning inserts, are transparent: a Project that COMPUTES anything, or
+    * any other operator, means None (substituting through e.g.
+    * `upper(n_name).as("n_name")` would drop the computation).
     *
-    * IsNotNull filters are NOT absorbed blindly: the caller must check
-    * the returned columns against the join-condition columns ([[keyOf]]).
-    * The inner join implies non-nullness only for its OWN keys; a user's
-    * `WHERE maybe IS NOT NULL` on a nullable payload column used to be
-    * swallowed here, silently routing to rows the filter should have
-    * dropped. */
-  private def flatten(plan: LogicalPlan)
-      : Option[(Set[String], Set[(String, String)], Set[String])] =
-    plan match {
+    * IsNotNull over the tree's OWN key columns is dropped, since its inner
+    * joins imply it; any other IsNotNull is a real predicate and stays. The
+    * caller re-applies the predicates by name over another scan, so a
+    * nondeterministic one, or one holding a subquery, means None. */
+  private def flatten(plan: LogicalPlan): Option[Flat] = {
+    def go(p: LogicalPlan): Option[Flat] = p match {
       case Project(projectList, child)
-          if projectList.forall(_.isInstanceOf[AttributeReference]) =>
-        flatten(child)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        val cs = conjuncts(f.condition)
-        val nnCols = cs.collect {
-          case org.apache.spark.sql.catalyst.expressions.IsNotNull(
-            a: AttributeReference) => a.name }
-        if (nnCols.length != cs.length) None
-        else flatten(f.child).map { case (l, c, nn) => (l, c, nn ++ nnCols) }
+          if projectList.forall(_.isInstanceOf[AttributeReference]) => go(child)
+      case f: Filter => go(f.child).map(c => c.copy(preds = c.preds ++ conjuncts(f.condition)))
       case j: Join if j.joinType == Inner && j.condition.isDefined =>
-        // a join CONDITION can carry more than the view's equi-keys:
-        // PushPredicateThroughJoin folds a cross-side user predicate
-        // (e.g. `r_name = 'EU' OR n_name = 'JP'`) into the condition.
-        // Ignoring such residue would route the view WITHOUT the
-        // predicate — a wrong answer — so any non-equi conjunct kills
-        // the exact route here (the containment route rewrites it).
         val (eqs, rest) = condSplit(j)
-        if (rest.nonEmpty) None
-        else for ((ll, lc, ln) <- flatten(j.left); (rl, rc, rn) <- flatten(j.right))
-          yield (ll ++ rl, lc ++ rc ++ eqs, ln ++ rn)
-      case leaf if leaf.children.isEmpty =>
-        Some((Set(leaf.canonicalized.toString), Set.empty, Set.empty))
+        for (l <- go(j.left); r <- go(j.right))
+          yield Flat(l.leaves ++ r.leaves, l.cond ++ r.cond ++ eqs, l.preds ++ r.preds ++ rest)
+      case leaf if leaf.children.isEmpty => Some(Flat(Seq(leaf.canonicalized), Set.empty, Nil))
       case _ => None
     }
-
-  /** [[flatten]] variant for the FILTERED containment route: instead of
-    * rejecting user filters, COLLECT their conjuncts for rewriting against
-    * the summary. By the time the rule runs (extraOptimizations), a user's
-    * `WHERE r_name = 'EUROPE'` has been pushed below the joins onto the
-    * leaf scans, so predicates are gathered from ANY depth. IsNotNull
-    * conjuncts over join-CONDITION columns are absorbed (the view's inner
-    * join already implies them — same contract as flatten); every other
-    * conjunct, including a user's own IS NOT NULL on a non-join column,
-    * is returned and must rewrite against the summary or the route is
-    * abandoned. */
-  private def flattenCollect(plan: LogicalPlan, joinCols: Set[String])
-      : Option[(Set[String], Set[(String, String)], Seq[Expression])] = plan match {
-    case Project(projectList, child)
-        if projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      flattenCollect(child, joinCols)
-    case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-      flattenCollect(f.child, joinCols).map { case (l, c, p) =>
-        val kept = conjuncts(f.condition).filterNot {
-          case IsNotNull(a: AttributeReference) => joinCols.contains(a.name)
-          case _ => false
-        }
-        (l, c, p ++ kept)
-      }
-    case j: Join if j.joinType == Inner && j.condition.isDefined =>
-      // non-equi residue in the condition (a cross-side user predicate
-      // PushPredicateThroughJoin folded in) is COLLECTED like a Filter
-      // conjunct: it must rewrite against the summary or the route is
-      // abandoned — never silently dropped
-      val (eqs, rest) = condSplit(j)
-      for ((ll, lc, lp) <- flattenCollect(j.left, joinCols);
-           (rl, rc, rp) <- flattenCollect(j.right, joinCols))
-        yield (ll ++ rl, lc ++ rc ++ eqs, lp ++ rp ++ rest)
-    case leaf if leaf.children.isEmpty =>
-      Some((Set(leaf.canonicalized.toString), Set.empty, Nil))
-    case _ => None
+    go(plan).map { f =>
+      val keyCols = f.cond.flatMap { case (a, b) => Seq(a, b) }
+      f.copy(preds = f.preds.filterNot {
+        case IsNotNull(a: AttributeReference) => keyCols(a.name)
+        case _ => false
+      })
+    }.filter(_.preds.forall(p => p.deterministic && !SubqueryExpression.hasSubquery(p)))
   }
 
   /** Split a join condition into its attr=attr equi-conjuncts (the view
-    * identity) and everything else (user predicates folded into the
-    * condition by pushdown — the callers decide whether that residue is
-    * rewritable or fatal). */
+    * identity) and everything else. */
   private def condSplit(j: Join): (Set[(String, String)], Seq[Expression]) = {
     val cs = j.condition.toSeq.flatMap(conjuncts)
     val eqs = cs.collect {
@@ -190,31 +149,32 @@ object MatView {
     (eqs, rest)
   }
 
-  /** Exact-route identity of a query join tree. IsNotNull filters inside
-    * the tree are legitimate ONLY over join-implied columns: the tree's
-    * own condition columns, or `outerJoinCols` — key columns of ENCLOSING
-    * inner joins, whose constraints Catalyst pushes into the subtree and
-    * whose joins re-apply the null semantics after the substitution. An
-    * IsNotNull over any other column is a real user predicate the
-    * materialized rows do not honor, so the route must not fire. */
-  private def keyOf(j: Join, outerJoinCols: Set[String] = Set.empty): Option[Key] =
-    flatten(j).flatMap { case (leaves, conds, nn) =>
-      val condCols = conds.flatMap { case (a, b) => Seq(a, b) }
-      if (nn.subsetOf(condCols ++ outerJoinCols)) Some(Key(leaves, conds))
-      else None
-    }
+  /** A join view answers the flattened query `q` when q's leaves are the
+    * view's leaves, or a subset whose missing leaves are all droppable,
+    * and the view's key pairs among q's leaves are exactly q's. */
+  private def answers(e: JoinEntry, q: Flat): Boolean = {
+    val leaves = q.leaves.toSet
+    leaves.size == q.leaves.size && leaves.subsetOf(e.key.leaves) &&
+      (e.key.leaves -- leaves).subsetOf(e.droppable) &&
+      e.key.cond.filter { case (a, b) => leaves(e.owner(a)) && leaves(e.owner(b)) } == q.cond
+  }
 
   /** By-NAME substitution (join views): every column the possibly-pruned
-    * join still outputs must exist in the materialized parquet; parents
-    * keep resolving because the aliases reuse the original expression
-    * ids. Name-keyed is right here because CREATE JOIN views require
-    * distinct column names across the joined tables. */
-  private def substituteByName(orig: LogicalPlan, replacement: LogicalPlan): Option[LogicalPlan] = {
+    * join still outputs, and every column `preds` read, must exist in the
+    * materialized parquet. `preds` are re-applied over the scan; parents
+    * keep resolving because the aliases reuse the original expression ids.
+    * Name-keyed is right here because CREATE JOIN views require distinct
+    * column names across the joined tables. */
+  private def substituteByName(orig: LogicalPlan, preds: Seq[Expression],
+                               replacement: LogicalPlan): Option[LogicalPlan] = {
     val byName = replacement.output.map(a => a.name -> a).toMap
-    if (orig.output.forall(o => byName.contains(o.name)))
+    if (!(orig.output ++ preds.flatMap(_.references)).forall(a => byName.contains(a.name))) None
+    else {
+      val source = preds.map(_.transform { case a: AttributeReference => byName(a.name) })
+        .reduceOption(And).fold(replacement)(Filter(_, replacement))
       Some(Project(orig.output.map(o =>
-        Alias(byName(o.name), o.name)(exprId = o.exprId)), replacement))
-    else None
+        Alias(byName(o.name), o.name)(exprId = o.exprId)), source))
+    }
   }
 
   /** POSITIONAL substitution (aggregate views): plan canonicalization
@@ -268,17 +228,13 @@ object MatView {
     * distinct/filtered aggregates and avg without its matching count
     * fall back to fact rows; their verbatim repeats still route via the
     * exact-match path.
-    * Child identity is flatten()'s (leaves, join-conds) key, which
-    * absorbs the pruning Projects that make coarser queries structurally
-    * different from the view. */
+    * Child identity is [[flatten]]'s key, which absorbs the pruning
+    * Projects that make coarser queries structurally different from the
+    * view. */
   private def substituteCoarse(a: Aggregate, e: AggEntry): Option[LogicalPlan] = {
-    if (e.childKey.isEmpty) return None
-    val key = e.childKey.get
-    val joinCols = key.cond.flatMap { case (x, y) => Seq(x, y) }
-    val flat = flattenCollect(a.child, joinCols)
-    if (flat.isEmpty) return None
-    val (leaves, conds, preds) = flat.get
-    if (Key(leaves, conds) != key) return None
+    val flat = flatten(a.child)
+    if (e.childKey.isEmpty || !flat.exists(f => e.childKey.contains(f.key))) return None
+    val preds = flat.get.preds
     // FILTER containment: a deterministic predicate referencing only the
     // summary's GROUPING KEYS selects whole groups — filtering the
     // summary's rows on the rewritten predicate keeps exactly the fact
@@ -298,8 +254,7 @@ object MatView {
     if (rewrittenPreds.exists(_.isEmpty)) return None
     val source: LogicalPlan =
       if (rewrittenPreds.isEmpty) e.replacement
-      else org.apache.spark.sql.catalyst.plans.logical.Filter(
-        rewrittenPreds.map(_.get).reduce(And), e.replacement)
+      else Filter(rewrittenPreds.map(_.get).reduce(And), e.replacement)
     val newGrouping = a.groupingExpressions.map(g => e.groupMap.get(sqlKey(g)))
     if (newGrouping.exists(_.isEmpty)) return None
     val newList = a.aggregateExpressions.map { ne =>
@@ -359,59 +314,91 @@ object MatView {
   private final class Rewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = {
       val entries = snapshot(spark)
+      val aggs = entries.collect { case e: AggEntry => e }
+      // the narrowest view first: an exact match scans fewer columns than a
+      // wider view the query is a subset of
+      val joins = entries.collect { case e: JoinEntry => e }.sortBy(_.key.leaves.size)
+      // top-down: the largest subtree a view answers is replaced whole, and
+      // a summary gets the first chance at an aggregate over a joined view
       if (entries.isEmpty) plan
-      else {
-      // key columns of every inner join in the WHOLE plan: an IsNotNull
-      // a parent join's constraint inference pushed into a candidate
-      // subtree is safe to absorb — that parent re-drops null keys
-      // post-substitution (keyOf rejects all other IsNotNulls)
-      val planJoinCols: Set[String] = plan.collect {
-        case pj: Join if pj.joinType == Inner =>
-          condSplit(pj)._1.flatMap { case (a, b) => Seq(a, b) }
-      }.flatten.toSet
-      plan.transformUp {
+      else plan.transformDown {
         // pre-aggregated summaries: the CANONICALIZED whole-aggregate
         // match first (zero re-aggregation — a verbatim dashboard repeat
         // reads the summary scan directly, whatever it renamed outputs
         // to), then the containment route (subset group-by re-aggregates
         // the summary — still zero fact rows).
         case a: Aggregate =>
-          val aggs = entries.collect { case e: AggEntry => e }
           aggs.find(_.canonical == a.canonicalized)
             .flatMap(e => substitutePositional(a, e.replacement))
             .orElse(aggs.iterator.map(substituteCoarse(a, _))
               .collectFirst { case Some(p) => p })
             .getOrElse(a)
-        case j: Join if j.joinType == Inner && j.condition.isDefined =>
-          entries.collectFirst {
-            case e: JoinEntry if keyOf(j, planJoinCols).contains(e.key) => e }
-            .flatMap(e => substituteByName(j, e.replacement)).getOrElse(j)
-      }
+        case j: Join if joins.nonEmpty && j.joinType == Inner && j.condition.isDefined =>
+          flatten(j).flatMap(q => joins.iterator.filter(answers(_, q))
+            .flatMap(e => substituteByName(j, q.preds, e.replacement)).nextOption())
+            .getOrElse(j)
       }
     }
   }
 
-  /** Materialize `view` (an inner equi-join chain — 2-way or n-way, any
-    * tree shape) to `path` and install the routing rule: from now on any
-    * query in this session joining the same relations on the same keys
-    * reads the parquet instead. Call again to refresh after base-table
-    * changes. */
+  /** Materialize `view` (an inner equi-join of plain relations — 2-way or
+    * n-way, any tree shape) to `path` and install the routing rule: from
+    * now on a query in this session that joins the same relations on the
+    * same keys, filtered or not, reads the parquet instead, and so does a
+    * query over a subset of the relations when the ones it leaves out are
+    * row-preserving ([[rowPreserving]]). The rule only sees plans, so a
+    * caller that changes a base table's files in place must [[drop]] the
+    * view (HashQL's DML hooks do). Call again to refresh. */
   def materialize(spark: SparkSession, name: String, view: DataFrame, path: String): Unit = {
     // refresh contract: drop the old registration FIRST — with it live,
     // the installed rule would route the view's own plan (and the
     // materializing write) to the STALE parquet: the key extraction below
     // would then see a scan instead of a join and throw.
     drop(spark, name)
-    val analyzed = view.queryExecution.optimizedPlan
     // collectFirst visits pre-order, so the first Join is the topmost —
-    // keyOf flattens the whole chain under it.
-    val joinKey = analyzed.collectFirst { case j: Join => keyOf(j) }.flatten.getOrElse(
+    // flatten takes the whole tree under it
+    val top = view.queryExecution.optimizedPlan.collectFirst { case j: Join => j }
+    val flat = top.flatMap(flatten).filter(_.preds.isEmpty).getOrElse(
       throw new IllegalArgumentException(
         "materialize expects an inner equi-join (chain) of plain relations"))
+    val leaves = top.get.collectLeaves()
+    val owner = leaves.flatMap(l => l.output.map(_.name -> l)).toMap
+    val droppable = rowPreserving(spark, leaves, owner, flat.cond)
     view.write.mode("overwrite").parquet(path)
     val replacement = spark.read.parquet(path).queryExecution.analyzed
-    mutate(spark)(_ += JoinEntry(name, joinKey, replacement))
+    mutate(spark)(_ += JoinEntry(name, flat.key, owner.view.mapValues(_.canonicalized).toMap,
+      droppable, replacement))
     installRule(spark)
+  }
+
+  /** The leaves a query may leave out of the view (canonicalized): a leaf
+    * whose key pairs all go to ONE partner leaf, whose own side of them is
+    * unique, and which every partner row matches (no NULL or dangling
+    * partner key). Such a leaf attaches to each row of the rest exactly
+    * once, so dropping it neither filters nor repeats their rows — the
+    * FK-to-PK lookup shape. One aggregate per candidate, plus one anti
+    * join when its key is unique. A view needs three leaves for a drop to
+    * leave a join behind, and distinct column names to tell leaves apart. */
+  private def rowPreserving(spark: SparkSession, leaves: Seq[LogicalPlan],
+                            owner: Map[String, LogicalPlan],
+                            cond: Set[(String, String)]): Set[LogicalPlan] = {
+    if (leaves.size < 3 || owner.size != leaves.map(_.output.size).sum) return Set.empty
+    leaves.filter { l =>
+      // (l's column, partner's column) per key pair touching l
+      val pairs = cond.toSeq.collect {
+        case (a, b) if owner(a) eq l => (a, b)
+        case (a, b) if owner(b) eq l => (b, a)
+      }
+      val partners = pairs.map(p => owner(p._2)).distinct
+      partners.size == 1 && {
+        val mine = GraftBridge.frame(spark, l)
+        val other = GraftBridge.frame(spark, partners.head)
+        mine.groupBy(pairs.map(p => col(p._1)): _*).count()
+          .filter(col("count") > 1).isEmpty &&
+          other.join(mine, pairs.map { case (m, o) => other(o) === mine(m) }.reduce(_ && _),
+            "left_anti").isEmpty
+      }
+    }.map(_.canonicalized).toSet
   }
 
   private def installRule(spark: SparkSession): Unit =
@@ -441,11 +428,9 @@ object MatView {
     *     count, decimal sums, and predicates touching NON-key columns
     *     recompute from facts (only their verbatim repeats route).
     *
-    * Register the aggregate view EITHER over base tables OR over a
-    * registered join view's tables, not both at once: the join rule
-    * rewrites the child first (transformUp is bottom-up), which changes
-    * the aggregate's canonical form away from one registered against raw
-    * tables. */
+    * The rule visits an Aggregate before its child join, so a summary
+    * over base tables keeps routing when a join view over the same tables
+    * is registered too. */
   def materializeAggregate(spark: SparkSession, name: String, view: DataFrame,
                            path: String): Unit =
     registerAggregateImpl(spark, name, view, path, writeSummary = true)
@@ -521,13 +506,9 @@ object MatView {
     val nameAmbiguous = leafNames.size != leafNames.distinct.size
     val childKey =
       if (keysCollide || nameAmbiguous) None
-      else flatten(agg.child).flatMap { case (l, c, nn) =>
-        // same guard as keyOf: a view registered over a join carrying a
-        // non-key IsNotNull has semantics the (leaves, conds) key cannot
-        // encode — disable containment for it rather than over-match
-        val condCols = c.flatMap { case (x, y) => Seq(x, y) }
-        if (nn.subsetOf(condCols)) Some(Key(l, c)) else None
-      }
+      // a view child carrying any predicate has semantics the key cannot
+      // encode — disable containment for it rather than over-match
+      else flatten(agg.child).filter(_.preds.isEmpty).map(_.key)
     mutate(spark)(_ += AggEntry(name, plan.canonicalized, replacement,
       childKey, group.result(), aggs.result()))
     installRule(spark)

@@ -22,10 +22,6 @@ object HashqlSuite extends Suite {
   private def run(s: SparkSession, d: String, sql: String): DataFrame =
     HashQL.execute(tpchCat(s, d), sql).get
 
-  // one materialized create-join per (session, dir) — see hashql_select_routed
-  private val routedReg = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), HashQL.JoinRegistry]
-
   /** example.py:86-132 replay: 4 people inserted, Sam's age updated. */
   private def peopleCat(s: SparkSession): GraftCatalog = {
     val cat = new GraftCatalog(s)
@@ -933,30 +929,26 @@ object HashqlSuite extends Suite {
     // from the pre-joined parquet (zero Join nodes — asserted in
     // MatViewSpec). This is the reference's read-path contract for create
     // join (server.py:806-894): SELECTs read maintained rows, not a live
-    // join build. The materialization is the WRITE-path cost, paid once
-    // per (session, dir) like a deployment's maintained view — repeated
-    // SELECTs (warmup + timed bench runs) measure the routed READ.
+    // join build. The result is written while routed, then the route is
+    // dropped, so no route outlives the query.
     "hashql_select_routed" -> Q(
       (s, d) => {
-        val reg = routedReg.getOrElseUpdate((s, d), {
-          val cat = tpchCat(s, d)
-          val r = new HashQL.JoinRegistry
-          HashQL.execute(cat,
-            "create join inner join nation on customer.c_nationkey = nation.n_nationkey " +
-              "inner join region on nation.n_regionkey = region.r_regionkey",
-            Some(r))
-          val tmp = java.nio.file.Files.createTempDirectory("graft_routed").toString
-          val name = HashQL.materializeJoin(
-            cat, r, Set("customer", "nation", "region"), s"$tmp/view")
-          graft.matview.MatView.drop(s, s"hashql:$name") // registry route only —
-          // no Catalyst-rule leak into unrelated queries in this session
-          r
-        })
-        HashQL.execute(tpchCat(s, d),
+        val cat = tpchCat(s, d)
+        val reg = new HashQL.JoinRegistry
+        HashQL.execute(cat,
+          "create join inner join nation on customer.c_nationkey = nation.n_nationkey " +
+            "inner join region on nation.n_regionkey = region.r_regionkey",
+          Some(reg))
+        val tmp = java.nio.file.Files.createTempDirectory("graft_routed").toString
+        val name = HashQL.materializeJoin(
+          cat, reg, Set("customer", "nation", "region"), s"$tmp/view")
+        HashQL.execute(cat,
           "select customer.c_custkey, nation.n_name, region.r_name from customer " +
             "inner join nation on customer.c_nationkey = nation.n_nationkey " +
             "inner join region on nation.n_regionkey = region.r_regionkey",
-          Some(reg)).get
+          Some(reg)).get.write.parquet(s"$tmp/result")
+        graft.matview.MatView.drop(s, s"hashql:$name")
+        s.read.parquet(s"$tmp/result")
       },
       Some("""SELECT c_custkey, n_name, r_name FROM customer
              |JOIN nation ON c_nationkey = n_nationkey
@@ -1500,9 +1492,9 @@ object HashqlSuite extends Suite {
 
     // SUBSET containment over a materialized create join (r9 verdict #3):
     // a 2-table query answers from the 3-table pre-joined parquet because
-    // region's clause was verified row-preserving at materialization
-    // (unique key + total match); MatViewSpec asserts zero Join nodes and
-    // that a fact-side drop still falls back.
+    // MatView verified region row-preserving at materialization (unique
+    // key + total match); MatViewSpec asserts zero Join nodes and that a
+    // fact-side drop still falls back.
     "matview_route_subset" -> Q(
       (s, d) => {
         val cat = tpchCat(s, d)

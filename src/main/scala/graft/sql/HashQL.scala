@@ -1018,10 +1018,10 @@ object HashQL {
     // on the hash match (never a nested loop). For OUTER joins that
     // placement is semantic: an ON conjunct decides MATCHING (unmatched
     // rows survive null-extended) where a WHERE conjunct filters rows —
-    // moving one to the other changes the answer. A clause with extras
-    // never routes through a materialized join view (views register the
-    // single-pair form; a silently-matching primary pair would drop the
-    // extra condition).
+    // moving one to the other changes the answer. An inner join's extras
+    // can still read a materialized join view: MatView re-applies
+    // non-key conjuncts over the view scan, and an extra column equality
+    // is a key pair the view must match.
   }
   final case class Select(items: Seq[SelectItem], table: String,
                           joins: Seq[JoinClause], wheres: Seq[Pred],
@@ -4066,11 +4066,14 @@ object HashQL {
 
   // ---------------- executor ----------------
 
-  /** Materialized-join registry (M3/J5): `create join` statements land here;
-    * `view` recomputes lazily (Spark's lazy evaluation makes every view
-    * consistent with current table state — the reference's insert-time
-    * maintenance is an optimization our streaming module provides
-    * separately, see graft.streaming.Streams.maintainJoin).
+  /** `create join` / `create agg view` registry (M3/J5): join definitions
+    * land here; [[HashQL.joinView]] expands one lazily (Spark's lazy
+    * evaluation makes every view consistent with current table state).
+    * Reading a materialized join is not decided here:
+    * [[HashQL.materializeJoin]] registers it with [[graft.matview.MatView]],
+    * whose Catalyst rule routes dialect and DataFrame queries alike. This
+    * registry's part is the DML hooks, which drop a join view's route (and
+    * fold or drop an aggregate view) when a table under it changes.
     *
     * Entries are keyed by the SET of tables the clauses touch (canonical
     * name = sorted tables joined with '+'), mirroring the reference's
@@ -4080,7 +4083,6 @@ object HashQL {
     * view. */
   final class JoinRegistry {
     private var views = Map.empty[String, CreateJoin]
-    private var mats = Map.empty[String, DataFrame]
 
     /** All tables a create-join's clauses mention. */
     def tablesOf(cj: CreateJoin): Set[String] =
@@ -4090,12 +4092,11 @@ object HashQL {
     def nameOf(cj: CreateJoin): String = tablesOf(cj).toSeq.sorted.mkString("+")
 
     /** Register; returns the canonical name. Same table set ⇒ replaces
-      * (versioning — the refreshed definition wins, and any materialized
-      * copy of the superseded definition stops routing). */
+      * (versioning — the refreshed definition wins; a materialized copy of
+      * the superseded one only ever answers its own join shape). */
     def put(cj: CreateJoin): String = {
       val n = nameOf(cj)
       views += n -> cj
-      mats -= n
       n
     }
     def get(name: String): Option[CreateJoin] = views.get(name)
@@ -4103,104 +4104,11 @@ object HashQL {
       views.get(tables.toSeq.sorted.mkString("+"))
     def names: Seq[String] = views.keys.toSeq.sorted
 
-    /** Attach a materialized frame (a parquet scan of the pre-joined rows)
-      * to a registered view — see [[HashQL.materializeJoin]]. */
-    private[sql] def setMaterialized(name: String, df: DataFrame): Unit =
-      mats += name -> df
-
-    /** Tables of a materialized view whose join clause was verified
-      * ROW-PRESERVING at materialization time (join key unique on the
-      * fresh side AND every accumulated row matched): dropping them from
-      * a query cannot multiply or filter the remaining tables' rows, so
-      * a SELECT over a SUBSET of the view's tables may still serve from
-      * the pre-joined parquet. Recorded by [[HashQL.materializeJoin]];
-      * see [[routedFrame]]. */
-    private var droppables = Map.empty[String, Set[String]]
-    private[sql] def setDroppable(name: String, tables: Set[String]): Unit =
-      droppables += name -> tables
-
-    /** Per-table column lists of a materialized view, recorded at
-      * materialization — subset routes project the pre-joined frame DOWN
-      * to the retained tables' columns, so a WHERE/projection referencing
-      * a dropped table's column fails up front (AnalysisException on the
-      * routed plan) exactly as it would after invalidation falls back to
-      * the live join — query validity no longer depends on
-      * materialization state (the r10 advice's subset-leak defect). */
-    private var tableCols = Map.empty[String, Map[String, Seq[String]]]
-    private[sql] def setTableCols(name: String,
-                                  cols: Map[String, Seq[String]]): Unit =
-      tableCols += name -> cols
-
-    /** The dialect read path of the reference's `create join`
-      * (server.py:806-894, README.md:29-64): a SELECT whose join clauses
-      * match a registered AND materialized view answers from the pre-joined
-      * parquet — zero Join nodes in its plan. Matching is on the unordered
-      * column-pair set, so clause order / side order don't matter; any
-      * difference (extra table, different key) falls back to the live join
-      * build. */
-    def routedFrame(tables: Set[String],
-                    joins: Seq[(String, ColRef, ColRef)],
-                    allowSubset: Boolean = true): Option[DataFrame] = {
-      val exact = for {
-        cj <- forTables(tables)
-        df <- mats.get(nameOf(cj))
-        if joinPairs(cj.clauses) == joinPairs(joins)
-      } yield df
-      exact.orElse(if (allowSubset) subsetRoute(tables, joins) else None)
-    }
-
-    /** SUBSET containment (round-10 growth — the r9 verdict's #3): a
-      * SELECT joining a strict subset of a materialized view's tables
-      * serves from the pre-joined parquet when (a) every DROPPED table's
-      * clause was verified row-preserving at materialization (unique
-      * fresh-side key + total match — the FK-to-PK lookup shape, so
-      * dropping it neither multiplies nor filters the retained rows) and
-      * (b) the view's join pairs among RETAINED tables are exactly the
-      * query's (same keys, clause/side order free). A row-multiplying
-      * drop (the fact side, or a non-unique dim key) fails (a) and falls
-      * back to the live join — asserted in HashQLSpec. */
-    private def subsetRoute(tables: Set[String],
-                            joins: Seq[(String, ColRef, ColRef)]): Option[DataFrame] = {
-      val qPairs = joinPairs(joins)
-      views.keysIterator.toSeq.sorted.iterator.flatMap { n =>
-        val cj = views(n)
-        val vt = tablesOf(cj)
-        val dropped = vt.diff(tables)
-        for {
-          df <- mats.get(n)
-          if tables.subsetOf(vt) && dropped.nonEmpty
-          if dropped.subsetOf(droppables.getOrElse(n, Set.empty))
-          retained = cj.clauses.filter { case (t, l, r) =>
-            Seq(t, l.table, r.table).forall(tables.contains) }
-          if joinPairs(retained) == qPairs
-        } yield {
-          // project down to the RETAINED tables' columns (recorded at
-          // materialization): the dropped tables' columns must not leak
-          // into the query's scope — see [[setTableCols]]
-          tableCols.get(n) match {
-            case Some(cols) =>
-              val keep = tables.flatMap(cols.getOrElse(_, Seq.empty))
-              df.select(df.columns.filter(keep).map(col).toSeq: _*)
-            case None => df
-          }
-        }
-      }.nextOption()
-    }
-
-    private def joinPairs(clauses: Seq[(String, ColRef, ColRef)]): Set[Set[(String, String)]] =
-      clauses.map { case (_, l, r) => Set((l.table, l.column), (r.table, r.column)) }.toSet
-
-    /** Drop materialized routes involving `table` — DML calls this so the
-      * read path can never serve stale pre-joined rows (the reference
-      * re-maintains the view at insert time, server.py:806-894; here the
-      * route falls back to the live join until re-materialized — same
-      * answers, one more join). The registered definition stays, so
-      * re-running [[HashQL.materializeJoin]] restores the fast path. */
-    private[sql] def invalidateTable(table: String): Unit = {
-      mats = mats.filter { case (name, _) => !name.split("\\+").contains(table) }
-      // aggregate views over the table: drop the Catalyst route too — the
-      // summary parquet is stale the moment facts change (same contract
-      // as the join mats; re-run materializeAggView to restore)
+    /** Drop every route keyed on `table` — DROP TABLE and ALTER TABLE call
+      * this. The registered definitions stay, so re-running
+      * [[HashQL.materializeJoin]] / materializeAggView restores them. */
+    private[sql] def invalidateTable(cat: GraftCatalog, table: String): Unit = {
+      dropJoinRoutes(cat, table)
       aggViews.foreach { case (name, reg) =>
         if (reg.tables.contains(table)) {
           graft.matview.MatView.drop(reg.spark, name)
@@ -4209,8 +4117,20 @@ object HashQL {
       }
     }
 
+    /** Pre-joined rows are stale the moment a table under them changes
+      * (the reference re-maintains the view at insert time,
+      * server.py:806-894; here the query falls back to the live join until
+      * re-materialized — same answers, one more join). The route must go
+      * even though the write changed the table's plan: a compaction back
+      * to the same files would make it match again. */
+    private def dropJoinRoutes(cat: GraftCatalog, table: String): Unit =
+      views.foreach { case (name, cj) =>
+        if (tablesOf(cj).contains(table))
+          graft.matview.MatView.drop(cat.spark, s"hashql:$name")
+      }
+
     /** DML hooks (round-7 growth — incremental view maintenance for the
-      * dialect's mutations): join mats always invalidate (pre-joined rows
+      * dialect's mutations): join routes always drop (pre-joined rows
       * are stale the moment facts change), but an aggregate view whose
       * summary can absorb the delta folds it instead and keeps routing —
       * at 100 TB that is one scan of the CHANGED rows versus a full fact
@@ -4241,7 +4161,7 @@ object HashQL {
     private def dmlHook(cat: GraftCatalog, table: String,
                         removed: Option[DataFrame],
                         added: Option[DataFrame]): Unit = {
-      mats = mats.filter { case (name, _) => !name.split("\\+").contains(table) }
+      dropJoinRoutes(cat, table)
       aggViews.foreach { case (name, reg) =>
         if (reg.tables.contains(table) &&
             !dmlFold(cat, name, reg, table, removed, added)) {
@@ -6154,7 +6074,7 @@ object HashQL {
       case DropTable(t, ifExists) =>
         if (cat.exists(t)) {
           // routes keyed on the table are stale the moment it goes
-          registry.foreach(_.invalidateTable(t))
+          registry.foreach(_.invalidateTable(cat, t))
           cat.drop(t)
         } else require(ifExists, s"drop table: no such table $t " +
           "(use `drop table if exists`)")
@@ -6181,7 +6101,7 @@ object HashQL {
         require(cat.exists(t), s"alter table: no such table $t")
         // any route/materialization keyed on the table is stale the
         // moment its shape changes
-        registry.foreach(_.invalidateTable(t))
+        registry.foreach(_.invalidateTable(cat, t))
         op match {
           case RenameTo(to) => cat.rename(t, to)
           case RenameCol(from, to) =>
@@ -7116,33 +7036,7 @@ object HashQL {
       case Select(items, table, joins, wheres, groupBy, having, orderBy, limit,
                   distinct, offset, qualify, _, _, _, _, _, _, _, _,
                   limitTies) =>
-        // read path first: if the statement's joins match a registered +
-        // materialized `create join`, answer from the pre-joined rows
-        // (the reference's whole point for create join — SELECTs read the
-        // maintained view, server.py:806-894). create join views are
-        // inner by construction, so a SELECT with any LEFT JOIN never
-        // routes (the pre-joined rows lack the unmatched-left rows).
-        val tset = fromTables(sel)
-        // a CTE shadowing any participating table makes the NAME-keyed
-        // route wrong (the pre-joined parquet holds BASE rows, not the
-        // shadow's) — fall back to the live build, which resolves shadows
-        // subset routing serves a query over FEWER tables from the wider
-        // pre-joined parquet — `select *` must not expand the dropped
-        // tables' columns, so Star disables that route (exact still fires)
-        val routed =
-          if (joins.exists(_.outer) || joins.exists(_.extra.nonEmpty) ||
-              sel.froms.nonEmpty || tset.exists(cat.isShadowed) ||
-              // a non-FIRST USING clause resolves its left key against
-              // the cumulative frame at lowering (round-16) — its
-              // recorded (table, l, r) identity is only a guess, so the
-              // NAME-keyed view route must not match on it (a first
-              // USING join's cumulative side IS the base table, which
-              // the recorded pair names exactly)
-              joins.drop(1).exists(_.using)) None
-          else registry.flatMap(_.routedFrame(tset,
-            joins.map(j => (j.table, j.l, j.r)),
-            allowSubset = !items.contains(Star)))
-        var df = routed.getOrElse {
+        var df = {
           var acc = cat.table(table)
           // comma sources build as CROSS joins; the WHERE equality
           // conjuncts below become join conditions in the optimizer
@@ -9095,53 +8989,25 @@ object HashQL {
     sf.toDF("graft_in_sub")
   }
 
-  /** Materialize a registered `create join` to parquet and wire BOTH read
-    * paths to it:
-    *  1. dialect SELECTs whose joins match the view answer from the parquet
-    *     via [[JoinRegistry.routedFrame]] (the reference's read-path
-    *     contract — server.py:806-894);
-    *  2. arbitrary DataFrame/SQL queries joining the same relations on the
-    *     same keys route through the Catalyst rule
-    *     ([[graft.matview.MatView.materialize]]).
-    * Freshness: re-run after base-table changes (or maintain incrementally
-    * with graft.streaming.Streams.maintainJoinN writing to `path`). Column
-    * names across the joined tables must be distinct (true for every view
-    * the dialect can register over distinct-prefixed tables; joins of
-    * insert-created tables collide on the synthesized `id` — the documented
-    * dialect limitation).
-    * @return the canonical view name (also the MatView registration name,
-    *         prefixed "hashql:") */
+  /** Materialize a registered `create join` to parquet and register it
+    * with [[graft.matview.MatView.materialize]]: from then on every query
+    * whose join it answers — dialect SELECTs (the reference's read-path
+    * contract, server.py:806-894), DataFrame and SQL queries alike — reads
+    * the parquet, until DML on one of its tables drops the route
+    * ([[JoinRegistry]]). Freshness: re-run after base-table changes (or
+    * maintain incrementally with graft.streaming.Streams.maintainJoinN
+    * writing to `path`). Column names across the joined tables must be
+    * distinct (true for every view the dialect can register over
+    * distinct-prefixed tables; joins of insert-created tables collide on
+    * the synthesized `id` — the documented dialect limitation).
+    * @return the canonical view name (the MatView registration name is
+    *         "hashql:" + it) */
   def materializeJoin(cat: GraftCatalog, registry: JoinRegistry,
                       tables: Set[String], path: String): String = {
     val cj = registry.forTables(tables).getOrElse(throw new IllegalArgumentException(
       s"no create join registered for ${tables.toSeq.sorted.mkString("+")}"))
     val name = registry.nameOf(cj)
-    val view = joinView(cat, cj)
-    graft.matview.MatView.materialize(view.sparkSession, s"hashql:$name", view, path)
-    registry.setMaterialized(name, view.sparkSession.read.parquet(path))
-    registry.setTableCols(name,
-      tables.iterator.map(t => t -> cat.table(t).columns.toSeq).toMap)
-    // record which tables a SUBSET query may drop (JoinRegistry.subsetRoute):
-    // clause k is row-preserving iff its fresh-side key is unique in its
-    // table AND the join kept the accumulated row count — the FK-to-PK
-    // lookup shape. Verified here, where materialization already pays a
-    // full pass; each check is one aggregate over the (typically
-    // dimension-sized) fresh table plus a count of the growing join.
-    val (t0, l0, r0) = cj.clauses.head
-    var acc = cat.table(if (l0.table == t0) r0.table else l0.table)
-    var accCnt = acc.count()
-    val droppable = Set.newBuilder[String]
-    cj.clauses.foreach { case (t, l, r) =>
-      val tdf = cat.table(t)
-      val (known, fresh) = if (l.table == t) (r, l) else (l, r)
-      val unique = tdf.groupBy(col(fresh.column)).count()
-        .filter(col("count") > 1).isEmpty
-      acc = acc.join(tdf, acc(known.column) === tdf(fresh.column))
-      val after = acc.count()
-      if (unique && after == accCnt) droppable += t
-      accCnt = after
-    }
-    registry.setDroppable(name, droppable.result())
+    graft.matview.MatView.materialize(cat.spark, s"hashql:$name", joinView(cat, cj), path)
     name
   }
 

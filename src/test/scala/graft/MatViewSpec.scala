@@ -10,6 +10,15 @@ class MatViewSpec extends SparkSpec {
   private def custNation = Tables.t(spark, sf, "customer")
     .join(Tables.t(spark, sf, "nation"), col("c_nationkey") === col("n_nationkey"))
 
+  private def joinsIn(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+
+  /** The rows of `df` as a multiset, collected now. */
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+
   test("routing rule replaces the join with the materialized scan") {
     val out = java.nio.file.Files.createTempDirectory("mv").toString
     MatView.materialize(spark, "cust_nation", custNation, out)
@@ -415,7 +424,7 @@ class MatViewSpec extends SparkSpec {
     } finally MatView.drop(spark, "cnr5")
   }
 
-  test("IsNotNull on a nullable NON-key column blocks the route; parent-join keys stay absorbable") {
+  test("a non-key IsNotNull is re-applied over the view scan") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("mv_nn").toString
     Seq((1L, Option("x")), (2L, None), (3L, Option("y")))
@@ -429,11 +438,11 @@ class MatViewSpec extends SparkSpec {
     try {
       // the inner join implies IsNotNull only for its KEYS — a user's
       // IS NOT NULL over a nullable payload column is a real predicate
-      // the materialized rows don't honor, so the route must decline
-      // (this returned 3 rows instead of 2 before the guard)
+      // the materialized rows don't honor, so the route re-applies it
+      // (absorbing it returned 3 rows instead of 2)
       val q = l.filter(col("maybe").isNotNull).join(r, col("k") === col("rk"))
-      assert(!q.queryExecution.executedPlan.toString.contains("view"),
-        "non-key IsNotNull absorbed into the route")
+      assert(q.queryExecution.executedPlan.toString.contains("view") && joinsIn(q) == 0,
+        s"filtered join not routed:\n${q.queryExecution.optimizedPlan}")
       assert(q.count() == 2)
       // …while the clean join still routes
       val clean = l.join(r, col("k") === col("rk"))
@@ -442,7 +451,7 @@ class MatViewSpec extends SparkSpec {
     } finally MatView.drop(spark, "nn_guard")
   }
 
-  test("filtered variants of the view are NOT rewritten (filter must survive)") {
+  test("filtered variants of the view route with the filter re-applied") {
     val out = java.nio.file.Files.createTempDirectory("mv3").toString
     MatView.materialize(spark, "cust_nation3", custNation, out)
     try {
@@ -450,8 +459,8 @@ class MatViewSpec extends SparkSpec {
         .filter(col("c_mktsegment") === "BUILDING")
         .join(Tables.t(spark, sf, "nation"), col("c_nationkey") === col("n_nationkey"))
       val physical = filtered.queryExecution.executedPlan.toString
-      assert(!physical.contains(out.split("/").last),
-        s"filtered query wrongly routed to matview:\n$physical")
+      assert(physical.contains(out.split("/").last) && joinsIn(filtered) == 0,
+        s"filtered query not routed to the matview:\n$physical")
       // and the count reflects the filter, not the full view
       val expected = Tables.t(spark, sf, "customer")
         .filter(col("c_mktsegment") === "BUILDING").count()
@@ -468,18 +477,23 @@ class MatViewSpec extends SparkSpec {
       // upper() aliased back to n_name: the flattened key would match and
       // every output name exists in the view — only the computed-Project
       // guard keeps this from being silently routed (and upper() dropped)
-      val q = Tables.t(spark, sf, "customer")
+      def q = Tables.t(spark, sf, "customer")
         .join(Tables.t(spark, sf, "nation"), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_regionkey"),
           upper(col("n_name")).as("n_name"))
         .join(Tables.t(spark, sf, "region"), col("n_regionkey") === col("r_regionkey"))
-      val physical = q.queryExecution.executedPlan.toString
-      assert(!physical.contains(out.split("/").last),
-        s"computed projection wrongly routed to matview:\n$physical")
+      // the whole 3-way tree must not route; the customer⋈nation subtree
+      // below the projection may (region is row-preserving), so exactly
+      // the join with region remains
+      assert(joinsIn(q) == 1,
+        s"computed projection routed with the whole view:\n${q.queryExecution.optimizedPlan}")
       // and upper() survived
       val names = q.select("n_name").distinct()
         .as[String].collect()
       assert(names.nonEmpty && names.forall(n => n == n.toUpperCase))
+      val routed = bag(q)
+      MatView.drop(spark, "cnr6")
+      assert(routed == bag(q))
     } finally MatView.drop(spark, "cnr6")
   }
 
@@ -494,21 +508,18 @@ class MatViewSpec extends SparkSpec {
       "create join inner join nation on customer.c_nationkey = nation.n_nationkey " +
         "inner join region on nation.n_regionkey = region.r_regionkey",
       Some(reg))
+    val sel = "select customer.c_custkey, nation.n_name, region.r_name from customer " +
+      "inner join nation on customer.c_nationkey = nation.n_nationkey " +
+      "inner join region on nation.n_regionkey = region.r_regionkey"
+    // the live join's answer, before any view exists
+    val live = bag(HashQL.execute(cat, sel).get)
     val tmp = java.nio.file.Files.createTempDirectory("mv_dialect").toString
     val name = HashQL.materializeJoin(
       cat, reg, Set("customer", "nation", "region"), s"$tmp/view")
     try {
-      val sel = "select customer.c_custkey, nation.n_name, region.r_name from customer " +
-        "inner join nation on customer.c_nationkey = nation.n_nationkey " +
-        "inner join region on nation.n_regionkey = region.r_regionkey"
       val routed = HashQL.execute(cat, sel, Some(reg)).get
-      val joins = routed.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }
-      assert(joins.isEmpty, s"dialect SELECT not routed:\n${routed.queryExecution.optimizedPlan}")
-      // same answer as the live-join path (no registry)
-      val live = HashQL.execute(cat, sel).get
-      assert(routed.exceptAll(live).isEmpty && live.exceptAll(routed).isEmpty)
+      assert(joinsIn(routed) == 0, s"dialect SELECT not routed:\n${routed.queryExecution.optimizedPlan}")
+      assert(bag(routed) == live)
       // a DIFFERENT join over the same tables must NOT route
       val other = HashQL.execute(cat,
         "select customer.c_custkey from customer " +
@@ -532,21 +543,29 @@ class MatViewSpec extends SparkSpec {
       "create join inner join nation on customer.c_nationkey = nation.n_nationkey " +
         "inner join region on nation.n_regionkey = region.r_regionkey",
       Some(reg))
+    val sub = "select customer.c_custkey, nation.n_name from customer " +
+      "inner join nation on customer.c_nationkey = nation.n_nationkey"
+    // an outer join above the routed inner join: the inner subtree routes,
+    // the LEFT JOIN stays live
+    val outer = sub + " left join orders on customer.c_custkey = orders.o_custkey"
+    cat.register("orders", Tables.t(spark, sf, "orders"))
+    val (liveSub, liveOuter) = (bag(HashQL.execute(cat, sub).get),
+      bag(HashQL.execute(cat, outer).get))
     val tmp = java.nio.file.Files.createTempDirectory("mv_subset").toString
     val name = HashQL.materializeJoin(
       cat, reg, Set("customer", "nation", "region"), s"$tmp/view")
     try {
       // dropping REGION (row-preserving: r_regionkey unique, every nation
       // matches) — the 2-table query serves from the 3-table parquet
-      val sub = "select customer.c_custkey, nation.n_name from customer " +
-        "inner join nation on customer.c_nationkey = nation.n_nationkey"
       val routed = HashQL.execute(cat, sub, Some(reg)).get
-      assert(routed.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.isEmpty, s"subset query not routed:\n${routed.queryExecution.optimizedPlan}")
+      assert(joinsIn(routed) == 0, s"subset query not routed:\n${routed.queryExecution.optimizedPlan}")
       assert(routed.queryExecution.executedPlan.toString.contains(s"$tmp/view"))
-      val live = HashQL.execute(cat, sub).get
-      assert(routed.exceptAll(live).isEmpty && live.exceptAll(routed).isEmpty)
+      assert(bag(routed) == liveSub)
+      val routedOuter = HashQL.execute(cat, outer, Some(reg)).get
+      assert(joinsIn(routedOuter) == 1 &&
+        routedOuter.queryExecution.executedPlan.toString.contains(s"$tmp/view"),
+        s"inner subtree under the outer join not routed:\n${routedOuter.queryExecution.optimizedPlan}")
+      assert(bag(routedOuter) == liveOuter)
       // dropping CUSTOMER would serve one row PER CUSTOMER for a
       // nation-only query — customer's clause is the fact side (not
       // row-preserving), so the route must NOT fire
@@ -565,6 +584,7 @@ class MatViewSpec extends SparkSpec {
         Some(reg)).get
       assert(!star.columns.contains("r_name"),
         s"star subset query leaked dropped-table columns: ${star.columns.mkString(",")}")
+      assert(star.collect().length == liveSub.values.sum)
     } finally MatView.drop(spark, s"hashql:$name")
   }
 
@@ -593,6 +613,109 @@ class MatViewSpec extends SparkSpec {
       assert(same.as[(String, Long)].collect().toSet ==
         Set(("x", 1L), ("y", 2L)))
     } finally MatView.drop(spark, "amb_view")
+  }
+
+  test("a view over one parquet dir never answers a join over another dir") {
+    // a_jan and a_feb share a schema; only the files differ
+    val dir = java.nio.file.Files.createTempDirectory("mv_dirs").toString
+    Seq((1L, 10L), (2L, 20L)).toDF("a_id", "a_b").write.parquet(s"$dir/a_jan")
+    Seq((3L, 10L), (4L, 10L), (5L, 20L)).toDF("a_id", "a_b").write.parquet(s"$dir/a_feb")
+    Seq((10L, "x"), (20L, "y")).toDF("b_id", "b_name").write.parquet(s"$dir/b")
+    def join(a: String) = spark.read.parquet(s"$dir/$a")
+      .join(spark.read.parquet(s"$dir/b"), col("a_b") === col("b_id"))
+    // the summary first: registered after the join view, its child would
+    // plan as the view scan
+    MatView.materializeAggregate(spark, "jan_agg",
+      join("a_jan").groupBy(col("b_name")).agg(count(lit(1)).as("cnt")), s"$dir/summary")
+    MatView.materialize(spark, "jan_join", join("a_jan"), s"$dir/view")
+    try {
+      assert(joinsIn(join("a_jan")) == 0, "the view's own join should route")
+      val feb = join("a_feb")
+      assert(joinsIn(feb) == 1, s"a_feb routed to a_jan's view:\n${feb.queryExecution.optimizedPlan}")
+      assert(feb.select("a_id").as[Long].collect().toSet == Set(3L, 4L, 5L))
+      // the aggregate containment route keys on the same leaves
+      val febTotal = join("a_feb").agg(count(lit(1)).as("cnt"))
+      assert(!febTotal.queryExecution.executedPlan.toString.contains(s"$dir/summary"),
+        "a_feb's rollup routed to a_jan's summary")
+      assert(febTotal.as[Long].collect().toSeq == Seq(3L))
+      val janTotal = join("a_jan").agg(count(lit(1)).as("cnt"))
+      assert(janTotal.queryExecution.executedPlan.toString.contains(s"$dir/summary"))
+      assert(janTotal.as[Long].collect().toSeq == Seq(2L))
+    } finally { MatView.drop(spark, "jan_join"); MatView.drop(spark, "jan_agg") }
+  }
+
+  test("a WHERE on a column the view lacks, or a rand() filter, does not route") {
+    val out = java.nio.file.Files.createTempDirectory("mv_narrow").toString
+    MatView.materialize(spark, "cn_narrow",
+      custNation.select("c_custkey", "c_nationkey", "n_nationkey", "n_name"), out)
+    try {
+      // the pruned view holds no c_mktsegment to re-apply the WHERE on
+      val seg = Tables.t(spark, sf, "customer").filter(col("c_mktsegment") === "BUILDING")
+        .join(Tables.t(spark, sf, "nation"), col("c_nationkey") === col("n_nationkey"))
+        .select("c_custkey", "n_name")
+      assert(joinsIn(seg) == 1, s"WHERE on a column the view lacks routed:\n${seg.queryExecution.optimizedPlan}")
+      assert(seg.count() ==
+        Tables.t(spark, sf, "customer").filter(col("c_mktsegment") === "BUILDING").count())
+      // the plain join still routes to the narrow view
+      val plain = custNation.select("c_custkey", "n_name")
+      assert(joinsIn(plain) == 0 && plain.queryExecution.executedPlan.toString.contains(out))
+      // a nondeterministic filter cannot be re-applied over another scan
+      val sampled = Tables.t(spark, sf, "customer").filter(rand(7) < 0.5)
+        .join(Tables.t(spark, sf, "nation"), col("c_nationkey") === col("n_nationkey"))
+        .select("c_custkey", "n_name")
+      assert(joinsIn(sampled) == 1, s"rand() filter routed:\n${sampled.queryExecution.optimizedPlan}")
+    } finally MatView.drop(spark, "cn_narrow")
+  }
+
+  test("the session's select_view shape (WHERE + missing-field skip) routes with 0 Joins") {
+    import graft.core.GraftCatalog
+    import graft.sql.HashQL
+    val cat = new GraftCatalog(spark)
+    Seq("customer", "nation", "region").foreach(n =>
+      cat.register(n, Tables.t(spark, sf, n)))
+    val reg = new HashQL.JoinRegistry
+    HashQL.execute(cat,
+      "create join inner join nation on customer.c_nationkey = nation.n_nationkey " +
+        "inner join region on nation.n_regionkey = region.r_regionkey", Some(reg))
+    val sel = "select customer.c_custkey, customer.c_name, nation.n_name, region.r_name " +
+      "from customer inner join nation on customer.c_nationkey = nation.n_nationkey " +
+      "inner join region on nation.n_regionkey = region.r_regionkey where customer.c_custkey = "
+    val keys = Seq(1L, 7L, 77L, 100000L)
+    val live = keys.map(k => bag(HashQL.execute(cat, sel + k).get))
+    val tmp = java.nio.file.Files.createTempDirectory("mv_select_view").toString
+    val name = HashQL.materializeJoin(
+      cat, reg, Set("customer", "nation", "region"), s"$tmp/view")
+    try keys.zip(live).foreach { case (k, want) =>
+      val routed = HashQL.execute(cat, sel + k, Some(reg)).get
+      assert(joinsIn(routed) == 0, s"select_view not routed:\n${routed.queryExecution.optimizedPlan}")
+      assert(bag(routed) == want, s"c_custkey = $k")
+    } finally MatView.drop(spark, s"hashql:$name")
+  }
+
+  test("a dimension with a key its partner lacks is not droppable") {
+    // fact f joins dimensions d (on f_d) and e (on f_e). e holds every
+    // f_e; d lacks f_d = 3, so the view has no row for f_id = 3, which a
+    // query over f and e alone must return
+    val dir = java.nio.file.Files.createTempDirectory("mv_drop").toString
+    Seq((1L, 1L, 1L), (2L, 2L, 1L), (3L, 3L, 2L)).toDF("f_id", "f_d", "f_e")
+      .write.parquet(s"$dir/f")
+    Seq((1L, "d1"), (2L, "d2")).toDF("d_id", "d_name").write.parquet(s"$dir/d")
+    Seq((1L, "e1"), (2L, "e2"), (9L, "e9")).toDF("e_id", "e_name").write.parquet(s"$dir/e")
+    def t(n: String) = spark.read.parquet(s"$dir/$n")
+    MatView.materialize(spark, "fde", t("f")
+      .join(t("d"), col("f_d") === col("d_id"))
+      .join(t("e"), col("f_e") === col("e_id")), s"$dir/view")
+    try {
+      // leaving out e (unique key, every f_e present) routes
+      val fd = t("f").join(t("d"), col("f_d") === col("d_id")).select("f_id", "d_name")
+      assert(joinsIn(fd) == 0, s"droppable e not dropped:\n${fd.queryExecution.optimizedPlan}")
+      assert(fd.as[(Long, String)].collect().toSet == Set((1L, "d1"), (2L, "d2")))
+      // leaving out d must not read the view
+      val fe = t("f").join(t("e"), col("f_e") === col("e_id")).select("f_id", "e_name")
+      assert(joinsIn(fe) == 1, s"non-droppable d dropped:\n${fe.queryExecution.optimizedPlan}")
+      assert(fe.as[(Long, String)].collect().toSet ==
+        Set((1L, "e1"), (2L, "e1"), (3L, "e2")))
+    } finally MatView.drop(spark, "fde")
   }
 
   test("unrelated queries are untouched") {

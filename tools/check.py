@@ -1,9 +1,12 @@
 #!/usr/bin/env python3
 """Dev-only local mirror of the driver's t2 gate (NOT part of the engine).
 
-Runs graft.Verify output against DuckDB oracles: for each <name>.parquet in
-the verify out dir, executes oracle_sql.json[name] in DuckDB over the same
-sf dir, sorts columns by name, sorts rows, and compares values.
+Runs graft.Verify output against DuckDB oracles: for each query named in
+the out dir's status.json or oracle_sql.json, executes oracle_sql.json[name]
+in DuckDB over the same sf dir, sorts columns by name, sorts rows, and
+compares values. A query Verify reported as failed, a missing output dir,
+and a stale one (an output dir status.json does not list as ok, i.e. not
+written by the Verify run that wrote status.json) all count as FAIL.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
@@ -28,9 +31,22 @@ def main(sf_dir, out_dir):
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    names = sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir())
+    status_file = Path(out_dir, "status.json")
+    status = json.loads(status_file.read_text()) if status_file.exists() else {}
     n_ok = n_bad = n_noracle = 0
-    for name in names:
+    for name in sorted(set(status) | set(oracle)):
+        if name not in status:
+            print(f"FAIL {name}: not run (stale or missing output)")
+            n_bad += 1
+            continue
+        if status[name] != "ok":
+            print(f"FAIL {name}: verify error: {status[name]}")
+            n_bad += 1
+            continue
+        if not Path(out_dir, name).is_dir():
+            print(f"FAIL {name}: missing output")
+            n_bad += 1
+            continue
         got_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
         got = canon(got_rel.fetchall(), [c.lower() for c in got_rel.columns])
         if name not in oracle:
